@@ -1,14 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import graft.functions.NativeFunctions
 
 /** Session-extension registration of the native expression library —
   * the deployment-grade alternative to the runtime
   * `HashFunctions.register`/`VectorFunctions.register` calls the query
-  * layer uses. Setting
+  * layer uses, built from the same [[NativeFunctions]] table. Setting
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
@@ -19,57 +17,6 @@ import graft.functions._
   * injection SPI, rather than by mutating a live FunctionRegistry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def fn(name: String, clazz: Class[_], usage: String)(
-      builder: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name),
-      // the full (non-deprecated) metadata constructor; only usage is
-      // populated — shown by DESCRIBE FUNCTION
-      new ExpressionInfo(clazz.getName, null, name, usage,
-        "", "", "", "", "", "", "built-in"),
-      builder)
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(fn("vec_dot", classOf[FloatVecDot],
-      "vec_dot(a, b) - dot product of two array<float> vectors")(
-      e => FloatVecDot(e(0), e(1))))
-    ext.injectFunction(fn("lsh_signatures", classOf[LshSignatures],
-      "lsh_signatures(v[, tables, planes]) - hyperplane-LSH signatures") {
-      case Seq(e) => LshSignatures(e, SimConstants.NTables, SimConstants.NPlanes)
-      case Seq(e, t, p) =>
-        LshSignatures(e, t.eval().asInstanceOf[Int], p.eval().asInstanceOf[Int])
-      case other => throw new IllegalArgumentException(
-        s"lsh_signatures expects 1 or 3 args, got ${other.length}")
-    })
-    ext.injectFunction(fn("minhash_sig", classOf[LongArrayMinHash],
-      "minhash_sig(hashes) - K minhash values of an array<bigint>")(
-      e => LongArrayMinHash(e.head)))
-    ext.injectFunction(fn("sorted_intersect_count", classOf[SortedLongIntersectCount],
-      "sorted_intersect_count(a, b) - intersection size of sorted array<bigint>")(
-      e => SortedLongIntersectCount(e(0), e(1))))
-    ext.injectFunction(fn("shingle_hashes", classOf[ShingleHashes],
-      "shingle_hashes(text) - sorted distinct mod-P hashes of 3-token shingles")(
-      e => ShingleHashes(e.head)))
-    ext.injectFunction(fn("simhash_p", classOf[SimHashP],
-      "simhash_p(hashes) - 64-bit SimHash via affine mod-P votes")(
-      e => SimHashP(e.head)))
-    ext.injectFunction(fn("simhash_text", classOf[SimHashText],
-      "simhash_text(text) - fused document SimHash (tokenize+hash+vote)")(
-      e => SimHashText(e.head)))
-    ext.injectFunction(fn("str_hash_p", classOf[StrHashP],
-      "str_hash_p(s) - deterministic polynomial hash mod P")(
-      e => StrHashP(e.head)))
-    ext.injectFunction(fn("winnow_fingerprints", classOf[WinnowFingerprints],
-      "winnow_fingerprints(text) - winnowing fingerprint set")(
-      e => WinnowFingerprints(e.head, HashFunctions.WinnowK, HashFunctions.WinnowW)))
-    ext.injectFunction(fn("tokenize_words", classOf[TokenizeWords],
-      "tokenize_words(text) - lowercased alphanumeric word tokens")(
-      e => TokenizeWords(e.head)))
-    ext.injectFunction(fn("bloom_might_contain", classOf[BloomMightContain],
-      "bloom_might_contain(bloom, key, k) - Bloom-filter membership probe")(
-      e => BloomMightContain(e(0), e(1), HashFunctions.intLit(e(2)))))
-    ext.injectFunction(fn("word_ngrams", classOf[WordNGrams],
-      "word_ngrams(text, n) - whitespace word n-grams in one pass")(
-      e => WordNGrams(e(0), HashFunctions.intLit(e(1)))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    NativeFunctions.all.foreach(ext.injectFunction)
 }

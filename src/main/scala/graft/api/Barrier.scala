@@ -120,8 +120,7 @@ object Barrier {
     * INVARIANT (r13 — [[release]] is destructive under
     * `localCheckpoint` mode, where it used to be a no-op): any result
     * that transitively reads a barriered frame must be FULLY
-    * MATERIALIZED (written, collected, or re-barriered into an outer
-    * scope via [[adopt]]) before the scope exits. A lazy DataFrame
+    * MATERIALIZED (written or collected) before the scope exits. A lazy DataFrame
     * returned OUT of a scope fails at materialization with missing
     * checkpoint blocks — the blocks were unpersisted at scope exit.
     * Under `persist` mode the same escape recomputes from lineage
@@ -155,32 +154,4 @@ object Barrier {
         lr.rdd.unpersist(false); ()
       case _ => ()
     }
-
-  /** Run `body` on THIS thread and return its result plus every
-    * barrier it created — the seam for operators that fan work out to
-    * OTHER threads (concurrent Spark job submission): the scope stack
-    * is a ThreadLocal, so a barrier created on a pool thread would
-    * otherwise escape the caller's [[scoped]] block and, under
-    * `persist` mode, stay cached forever. The fan-out caller wraps
-    * each task body in `collecting`, then [[adopt]]s the returned
-    * frames into its own scope (see
-    * [[graft.api.Similarity.pqTrain]]). */
-  def collecting[T](body: => T): (T, Seq[DataFrame]) = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    scopeStack.set(buf :: scopeStack.get)
-    try { val r = body; (r, buf.toList) }
-    catch {
-      // On failure nobody will ever adopt buf's frames — release them
-      // here or they stay cached forever under `persist` mode (the
-      // exact leak collecting exists to prevent, on the error path).
-      case e: Throwable => buf.foreach(release); throw e
-    }
-    finally scopeStack.set(scopeStack.get.tail)
-  }
-
-  /** Register an already-materialized barrier into the CURRENT
-    * thread's innermost scope (no-op outside any scope) — the
-    * receiving half of [[collecting]]. */
-  def adopt(df: DataFrame): Unit =
-    scopeStack.get.headOption.foreach(_ += df)
 }

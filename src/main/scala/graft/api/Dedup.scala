@@ -79,11 +79,11 @@ object Dedup extends org.apache.spark.internal.Logging {
     // shingle arrays re-attached per pair — the exact duplicate-heap
     // blowup hammingPairs got guarded against in r14, one signature
     // family over.
-    validatePairBudget(sigged, col("sig"), "jaccardPairs",
+    Guard.run(sigged.sparkSession, pairGuard("jaccardPairs",
       "Use Dedup.jaccardGroups (contracts to distinct shingle sets " +
         "first — linear in n, heap members never pair-expanded), or " +
         "exact-dedup by fingerprint (Dedup.exactGroups) and near-dup " +
-        "only the keepers")
+        "only the keepers")(pairEstFrame(sigged, col("sig"))))
     val banded = Barrier(sigged
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -159,11 +159,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     // r15 guard: the full band-key ARRAY is the asset's stored stand-in
     // for the minhash signature (equal texts ⇒ equal signatures ⇒ equal
     // bkeys ⇒ every band collides and every pair verifies at jac = 1.0)
-    validateIncPairBudget(corpusSigs, incSigs, col("bkeys"),
-      "incrementalJaccardPairs",
+    Guard.run(incSigs.sparkSession, incPairGuard("incrementalJaccardPairs",
       "Exact-dedup the increment first (Dedup.exactGroups) or contract " +
-        "heaps with Dedup.jaccardGroups before pairing",
-      corpusHist)
+        "heaps with Dedup.jaccardGroups before pairing")(
+      incPairEstFrame(corpusSigs, incSigs, col("bkeys"), corpusHist)))
     // barrier: the increment's banded rows are probed against the union
     // below, so they would otherwise be derived twice
     val incBanded = Barrier(explodeBands(incSigs))
@@ -220,118 +219,86 @@ object Dedup extends org.apache.spark.internal.Logging {
   val CandBudgetMaxKey = "spark.graft.dedup.candbudget.max"
   val CandBudgetDefault: Long = 10000000000L
 
-  /** Estimate the LSH band join's candidate volume from the bucket
-    * histogram — Σ C(c,2) same-bucket plus, under multi-probe, the
-    * Hamming-1 cross-bucket products — and fail loud (per
-    * [[CandBudgetConfKey]]) when it exceeds the budget. The histogram
-    * is one map-side-combined aggregate over the slim banded rows
-    * (≤ tables·2^planes result rows), and the probe cross-terms join
-    * that tiny histogram against itself `probes` times — trivial next
-    * to the join it guards. Candidate volume scales as
-    * n²·tables/2^planes (measured, r14 LSH probe): the remedy at
-    * corpus scale is planes ~ log n with tables resized per
+  /** LSH band-join candidate volume from the bucket histogram — Σ C(c,2)
+    * same-bucket plus, under multi-probe, half the Hamming-1
+    * cross-bucket products. The histogram is one map-side-combined
+    * aggregate over the slim banded rows (≤ tables·2^planes result
+    * rows), and all probed flips join it in ONE union — trivial next to
+    * the join it guards. Candidate volume scales as n²·tables/2^planes
+    * (measured, r14 LSH probe): the remedy at corpus scale is
+    * planes ~ log n with tables resized per
     * [[graft.api.Similarity.lshTablesFor]], or the PQ/IVF family for
     * low-similarity regimes (see [[embeddingPairs]]' scaladoc). */
-  private def validateCandBudget(banded: DataFrame, probes: Int,
-      what: String): Unit = {
-    val spark = banded.sparkSession
-    val mode = Similarity.guardMode(spark, CandBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(CandBudgetMaxKey,
-      CandBudgetDefault.toString).toLong
+  private def candEstFrame(banded: DataFrame, probes: Int): DataFrame = {
     val hist = Barrier(banded.groupBy(col("tbl"), col("sig"))
       .agg(count(lit(1)).cast("double").as("c")))
-    val oneShotF = hist
-      .agg(coalesce(sum(col("c") * (col("c") - 1.0) / 2.0), lit(0.0)))
-    // all probed flips in ONE union → one aggregate, not `probes`;
-    // r21: the one-shot and cross-term scalars evaluate in ONE fused
-    // job (scalarsOf) over the barrier'd histogram — two driver
-    // round-trips before
-    val crossTermsF = if (probes == 0) None else {
+    val oneShot = hist
+      .agg(coalesce(sum(col("c") * (col("c") - 1.0) / 2.0), lit(0.0)).as("e"))
+    if (probes == 0) oneShot
+    else {
       val flips = (0 until probes).map(p => hist.select(col("tbl"),
           col("sig").bitwiseXOR(lit(1L << p)).as("sig"), col("c").as("cn")))
         .reduce(_ union _)
-      Some(hist.join(flips, Seq("tbl", "sig"))
-        .agg(coalesce(sum(col("c") * col("cn")), lit(0.0))))
-    }
-    val ests = scalarsOf(Seq(oneShotF) ++ crossTermsF.toSeq)
-    val est = ests.head + (if (crossTermsF.isEmpty) 0.0 else ests.last / 2.0)
-    Barrier.release(hist)
-    if (est > budget) {
-      val msg = f"$what: the band join would generate ~$est%.3g candidate " +
-        s"pairs (> budget $budget, conf $CandBudgetMaxKey) — candidate " +
-        "volume grows as n^2*tables/2^planes at a fixed geometry " +
-        "(measured r14: 1.8e12 at 2M rows for the 8x6 fixture " +
-        "geometry, x100 per decade). Grow planes ~ log(n) and resize " +
-        "tables from the measured per-table rate " +
-        "(Similarity.lshTablesFor), use the PQ/IVF family for " +
-        s"low-similarity search, or set $CandBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+      oneShot.crossJoin(hist.join(flips, Seq("tbl", "sig"))
+          .agg(coalesce(sum(col("c") * col("cn")), lit(0.0)).as("x")))
+        .select(col("e") + col("x") / 2.0)
     }
   }
 
-  /** Two-sided [[validateCandBudget]] for [[incrementalEmbeddingPairs]]:
-    * the probe join's candidate volume is Σ over (tbl, sig) buckets of
+  private def candGuard(what: String)(est: => DataFrame): Guard.Check =
+    Guard.budget(CandBudgetConfKey, CandBudgetMaxKey, CandBudgetDefault)(est) {
+      (est, budget) =>
+        f"$what: the band join would generate ~$est%.3g candidate " +
+          s"pairs (> budget $budget, conf $CandBudgetMaxKey) — candidate " +
+          "volume grows as n^2*tables/2^planes at a fixed geometry " +
+          "(measured r14: 1.8e12 at 2M rows for the 8x6 fixture " +
+          "geometry, x100 per decade). Grow planes ~ log(n) and resize " +
+          "tables from the measured per-table rate " +
+          "(Similarity.lshTablesFor), use the PQ/IVF family for " +
+          s"low-similarity search, or set $CandBudgetConfKey=warn|off."
+    }
+
+  /** Two-sided [[candEstFrame]] for [[incrementalEmbeddingPairs]]: the
+    * probe join's candidate volume is Σ over (tbl, sig) buckets of
     * c_inc·c_corpus + C(c_inc, 2), plus — under multi-probe, which
-    * lives on the INC side only — Σ over probed bit flips of
-    * c_inc(sig⊕bit)·c_all(sig) (one-sided probing: no /2). A daily
-    * increment is small, so the one-shot terms are usually tiny — the
-    * wall this guards is a hot bucket in the corpus ASSET (a saturated
-    * signature space at a too-small `planes` geometry): every
-    * increment row landing in it drags the whole bucket through the
-    * join, day after day. Costs one map-side-combined aggregate over
-    * both sides' slim banded rows (the corpus side is one streamed
-    * scan of the signature asset's sigs column) — or, with
-    * `corpusHist` (the [[readSignatureHistogram]] sidecar keyed by
+    * lives on the INC side only — Σ over the ≤-radius probe masks of
+    * c_inc(sig⊕mask)·c_all(sig) (one-sided probing: no /2). The wall
+    * this guards is a hot bucket in the corpus ASSET: every increment
+    * row landing in it drags the whole bucket through the join, day
+    * after day. Costs one map-side-combined aggregate over both sides'
+    * slim banded rows — or, with `corpusHist` (the
+    * [[readSignatureHistogram]] sidecar keyed by
     * [[embeddingGuardKeys]]), Θ(increment + histogram) with NO corpus
-    * scan: the increment's bucket counts join the persisted corpus
-    * bucket counts, with a `+ 1.0` floor standing in for the 0-or-1
-    * true copies the c ≥ 2-truncated sidecar cannot see (always
-    * conservative, over by ≤ (1+probes)·|inc banded rows|). */
-  private def validateIncCandBudget(corpusBanded: DataFrame,
-      incBanded: DataFrame, probes: Int, what: String,
-      corpusHist: Option[DataFrame] = None, radius: Int = 1): Unit = {
-    val spark = incBanded.sparkSession
-    val mode = Similarity.guardMode(spark, CandBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(CandBudgetMaxKey,
-      CandBudgetDefault.toString).toLong
-    // r18: the probe targets are the FULL ≤-radius mask set (1-bit
-    // flips at the pre-r18 radius 1; +2-bit/3-bit masks under the
-    // asymmetric ladder) — the estimate must cover exactly the buckets
-    // the expanded probe join will visit, or an escalated radius could
-    // smuggle a hot 2-bits-away bucket past the guard
+    * scan: a `+ 1.0` floor stands in for the 0-or-1 true copies the
+    * c ≥ 2-truncated sidecar cannot see (always conservative, over by
+    * ≤ (1+probes)·|inc banded rows|). */
+  private def incCandEstFrame(corpusBanded: DataFrame, incBanded: DataFrame,
+      probes: Int, corpusHist: Option[DataFrame], radius: Int): DataFrame = {
+    // the estimate covers exactly the buckets the expanded probe join
+    // visits, or an escalated radius could smuggle a hot bucket past it
     val flipMasks = Similarity.probeMasks(probes, radius).drop(1)
-    val est = corpusHist match {
+    def fused(oneShot: DataFrame, crossTerms: => DataFrame): DataFrame =
+      if (probes == 0) oneShot
+      else oneShot.crossJoin(crossTerms).select(col("e") + col("x"))
+    corpusHist match {
       case Some(h0) =>
-        // Θ(increment): inc-only bucket counts, corpus counts looked up
-        // in the sidecar with the +1 floor. The cross-term targets are
-        // the FLIPPED buckets — their corpus population must come from
-        // the sidecar too (an inc row probing a hot corpus-only bucket
-        // is exactly the wall this guards), so flips LEFT-join both the
-        // inc counts and the sidecar; a target absent from both gets
-        // the floor's cin·1 (conservative, never a miss).
+        // cross-term targets are FLIPPED buckets, whose corpus population
+        // must come from the sidecar too (an inc row probing a hot
+        // corpus-only bucket is exactly the wall this guards), so flips
+        // LEFT-join both the inc counts and the sidecar
         val h = Barrier(h0.select(col("k.tbl").as("tbl"),
           col("k.sig").as("sig"), col("cc").cast("double").as("hcc")))
         val incAgg = Barrier(incBanded.groupBy(col("tbl"), col("sig"))
           .agg(count(lit(1)).cast("double").as("ci")))
         val ccOf = coalesce(col("hcc"), lit(0.0)) + 1.0
-        val oneShotF = incAgg.join(h, Seq("tbl", "sig"), "left")
-          .agg(coalesce(sum(ccOf * col("ci") +
-            col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)))
-        val crossTermsF = if (probes == 0) None else {
-          val flips = flippedCounts(incAgg, "ci", flipMasks)
-          Some(flips.join(incAgg, Seq("tbl", "sig"), "left")
+        fused(incAgg.join(h, Seq("tbl", "sig"), "left")
+            .agg(coalesce(sum(ccOf * col("ci") +
+              col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)).as("e")),
+          flippedCounts(incAgg, "ci", flipMasks)
+            .join(incAgg, Seq("tbl", "sig"), "left")
             .join(h, Seq("tbl", "sig"), "left")
             .agg(coalesce(sum(col("cin") *
-              (ccOf + coalesce(col("ci"), lit(0.0)))), lit(0.0))))
-        }
-        // r21: both scalars in one fused job (scalarsOf), not one each
-        val ests = scalarsOf(Seq(oneShotF) ++ crossTermsF.toSeq)
-        Barrier.release(incAgg)
-        Barrier.release(h)
-        ests.sum
+              (ccOf + coalesce(col("ci"), lit(0.0)))), lit(0.0)).as("x")))
       case None =>
         val hist = Barrier(
           corpusBanded.select(col("tbl"), col("sig"), lit(0).as("side"))
@@ -339,31 +306,26 @@ object Dedup extends org.apache.spark.internal.Logging {
             .groupBy("tbl", "sig")
             .agg(sum(when(col("side") === 0, 1.0).otherwise(0.0)).as("cc"),
               sum(when(col("side") === 1, 1.0).otherwise(0.0)).as("ci")))
-        val oneShotF = hist
-          .agg(coalesce(sum(col("ci") * col("cc") +
-            col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)))
-        val crossTermsF = if (probes == 0) None else {
-          val flips = flippedCounts(hist, "ci", flipMasks)
-          Some(hist.join(flips, Seq("tbl", "sig"))
-            .agg(coalesce(sum(col("cin") * (col("cc") + col("ci"))), lit(0.0))))
-        }
-        val ests = scalarsOf(Seq(oneShotF) ++ crossTermsF.toSeq)
-        Barrier.release(hist)
-        ests.sum
-    }
-    if (est > budget) {
-      val msg = f"$what: the probe join would generate ~$est%.3g " +
-        s"candidate pairs (> budget $budget, conf $CandBudgetMaxKey) — " +
-        "a hot bucket in the corpus signature asset drags its whole " +
-        "population through the join for every increment row landing " +
-        "in it. Re-generate the asset at planes ~ log(n) with tables " +
-        "from the measured per-table rate (Similarity.lshTablesFor), " +
-        "use the PQ/IVF family for low-similarity search, or set " +
-        s"$CandBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+        fused(hist.agg(coalesce(sum(col("ci") * col("cc") +
+            col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)).as("e")),
+          hist.join(flippedCounts(hist, "ci", flipMasks), Seq("tbl", "sig"))
+            .agg(coalesce(sum(col("cin") * (col("cc") + col("ci"))),
+              lit(0.0)).as("x")))
     }
   }
+
+  private def incCandGuard(what: String)(est: => DataFrame): Guard.Check =
+    Guard.budget(CandBudgetConfKey, CandBudgetMaxKey, CandBudgetDefault)(est) {
+      (est, budget) =>
+        f"$what: the probe join would generate ~$est%.3g " +
+          s"candidate pairs (> budget $budget, conf $CandBudgetMaxKey) — " +
+          "a hot bucket in the corpus signature asset drags its whole " +
+          "population through the join for every increment row landing " +
+          "in it. Re-generate the asset at planes ~ log(n) with tables " +
+          "from the measured per-table rate (Similarity.lshTablesFor), " +
+          "use the PQ/IVF family for low-similarity search, or set " +
+          s"$CandBudgetConfKey=warn|off."
+    }
 
   /** Per-bucket counts re-keyed to every probe-mask flip: one row per
     * (source bucket, mask) at the FLIPPED signature — the probe-target
@@ -381,128 +343,58 @@ object Dedup extends org.apache.spark.internal.Logging {
         col(cntCol).as("cin"))
   }
 
-  /** Estimate the GUARANTEED pair output — Σ over exact-signature
-    * buckets of C(c, 2), every one of which survives verification
-    * (equal signatures come from equal inputs: hamming 0 / jac 1.0) —
-    * and fail loud (per [[PairBudgetConfKey]]) when it exceeds the
-    * budget: pair output on duplicate-heaped corpora is QUADRATIC (a
-    * 10 k-copy image is 5×10⁷ pairs), and no downstream consumer
-    * survives what the join emits. Exact-sig heaps — not band-bucket
-    * collisions — are the killer the r13 probe measured: random
-    * band-bucket collisions at large n stream through the verification
-    * filter and vanish, but equal-sig pairs all land in the result
-    * (and its distinct). The precheck is one map-side-combined
-    * aggregate over the slim keyed rows — trivial next to the join it
-    * guards. Double arithmetic: the estimate saturates instead of
-    * overflowing (precision is irrelevant at the 1e8 boundary).
+  /** The GUARANTEED pair output — Σ over exact-signature buckets of
+    * C(c, 2), every one of which survives verification (equal
+    * signatures come from equal inputs: hamming 0 / jac 1.0). Pair
+    * output on duplicate-heaped corpora is QUADRATIC (a 10 k-copy image
+    * is 5×10⁷ pairs), and no downstream consumer survives what the
+    * join emits; random band-bucket collisions stream through the
+    * verification filter and vanish, equal-sig pairs all land in the
+    * result. One map-side-combined aggregate over the slim keyed rows.
+    * Double arithmetic: the estimate saturates instead of overflowing.
     *
     * `key` is the full-signature column equal values of which
-    * GUARANTEE a surviving pair: the 64-bit sig for the hamming
-    * family, the 32-minhash signature array for the jaccard family
-    * (identical texts ⇒ identical signatures ⇒ every band collides
-    * AND every pair verifies at jac = 1.0 — the r14 verdict's
-    * duplicate-heap mechanism, one signature family over from mm8's
-    * measured wall). `remedy` names the contraction verb the caller
-    * should compose instead. */
-  /** Evaluate several single-row single-DOUBLE-column estimate frames
-    * in ONE Spark job (a crossJoin of the scalar aggregates) — each
-    * guard estimate was its own driver-synchronized `.head` job
-    * otherwise, and on the multi-guard operators (the extended hamming
-    * band runs a pair guard AND a candidate guard) the precheck cost
-    * was 2-3 jobs per call (r20 verdict: dd13 re-priced an unchanged
-    * corpus every run). The guarded join still never starts before
-    * every estimate clears. */
-  private def scalarsOf(frames: Seq[DataFrame]): Seq[Double] =
-    if (frames.isEmpty) Seq.empty
-    else {
-      val row = frames.reduce(_.crossJoin(_)).head
-      frames.indices.map(row.getDouble)
-    }
-
-  /** [[validatePairBudget]]'s estimate as a 1-row frame — the seam
-    * that lets callers fuse it with other guard scalars via
-    * [[scalarsOf]]. */
-  private def pairBudgetEstFrame(docs: DataFrame, key: Column): DataFrame =
+    * GUARANTEE a surviving pair: the 64-bit sig for the hamming family,
+    * the 32-minhash signature array for the jaccard family. */
+  private def pairEstFrame(docs: DataFrame, key: Column): DataFrame =
     docs.groupBy(key.as("k"))
       .agg(count(lit(1)).cast("double").as("c"))
       .agg(coalesce(sum(col("c") * (col("c") - 1.0) / 2.0), lit(0.0)))
 
-  private def checkPairBudget(est: Double, budget: Long, mode: String,
-      what: String, remedy: String): Unit =
-    if (est > budget) {
-      val msg = f"$what: equal-signature heaps alone guarantee ~$est%.3g " +
-        s"output pairs (> budget $budget, conf $PairBudgetMaxKey) — the " +
-        "quadratic all-pairs regime on duplicate-heaped signatures " +
-        "(measured r13: 6.5e8 intra-bucket pairs at 500k docs OOM'd a " +
-        s"32-slot/8g session). $remedy, or set " +
-        s"$PairBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+  /** Pair-budget guard; `remedy` names the contraction verb the caller
+    * should compose instead. */
+  private def pairGuard(what: String, remedy: String)(
+      est: => DataFrame): Guard.Check =
+    Guard.budget(PairBudgetConfKey, PairBudgetMaxKey, PairBudgetDefault)(est) {
+      (est, budget) =>
+        f"$what: equal-signature heaps alone guarantee ~$est%.3g " +
+          s"output pairs (> budget $budget, conf $PairBudgetMaxKey) — the " +
+          "quadratic all-pairs regime on duplicate-heaped signatures " +
+          "(measured r13: 6.5e8 intra-bucket pairs at 500k docs OOM'd a " +
+          s"32-slot/8g session). $remedy, or set " +
+          s"$PairBudgetConfKey=warn|off."
     }
 
-  private def validatePairBudget(docs: DataFrame, key: Column,
-      what: String, remedy: String): Unit = {
-    val spark = docs.sparkSession
-    val mode = Similarity.guardMode(spark, PairBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(PairBudgetMaxKey,
-      PairBudgetDefault.toString).toLong
-    checkPairBudget(pairBudgetEstFrame(docs, key).head.getDouble(0),
-      budget, mode, what, remedy)
-  }
-
-  /** Two-sided [[validatePairBudget]] for the INCREMENTAL pair
-    * generators: the guaranteed surviving pairs of the probe join are
+  /** Two-sided [[pairEstFrame]] for the INCREMENTAL pair generators:
     * Σ over exact-signature buckets of c_corpus·c_inc + C(c_inc, 2)
-    * (inc×corpus plus inc×inc; corpus×corpus is never paired by
-    * construction). A duplicate heap ALREADY IN the corpus asset costs
-    * nothing until an increment doc lands in it — then every corpus
-    * copy pairs with it, which is exactly how a re-crawled boilerplate
-    * page detonates a daily run.
+    * (inc×corpus plus inc×inc; corpus×corpus is never paired). A
+    * duplicate heap ALREADY IN the corpus asset costs nothing until an
+    * increment doc lands in it — then every corpus copy pairs with it.
     *
-    * COST (r16, the r15 verdict's top task): with `corpusHist` — the
-    * persisted signature-count sidecar from [[readSignatureHistogram]]
-    * — the precheck aggregates ONLY the increment and joins the slim
-    * histogram: Θ(increment + histogram), no corpus scan (the full
-    * union aggregate re-read the whole 100 TB-scale asset on every
-    * dd7–dd9 call and every streaming micro-batch — doubling the
-    * daily path's corpus I/O). Without it, the full aggregate over
-    * the union of both sides' slim keyed rows remains the fallback.
-    * The sidecar stores only keys with ≥ 2 corpus copies, so a key
-    * absent from it has 0 or 1 true copies — modeled as 1 (the
-    * `+ 1.0` floor below): the histogram estimate is ALWAYS ≥ the
-    * exact one, over by at most Σ c_inc = |increment| pairs.
+    * With `corpusHist` — the persisted signature-count sidecar from
+    * [[readSignatureHistogram]] — only the increment is aggregated and
+    * joined to the slim histogram: Θ(increment + histogram), no corpus
+    * scan. Without it, the full aggregate over the union of both sides'
+    * slim keyed rows. The sidecar stores only keys with ≥ 2 corpus
+    * copies, so an absent key is modeled as 1 copy (the `+ 1.0` floor):
+    * the histogram estimate is ALWAYS ≥ the exact one, over by at most
+    * |increment| pairs.
     *
-    * SCOPE (widened by the r19 hamming band, per the r19 ADVICE):
-    * the estimate counts EXACT-signature heaps only — the pairs the
-    * join GUARANTEES to emit at any distance threshold — so it is a
-    * LOWER bound on output, tight for the duplicate-heap detonation
-    * it exists to catch. At `maxHamming` ∈ [4, 7] a cluster of
-    * near-equal-but-unequal signatures (hamming ≤ 7 pairwise, e.g.
-    * re-encodes of one image whose perceptual hashes wobble a few
-    * bits) also yields quadratic join output, and this guard cannot
-    * see it: those pairs collide on FLIP-ADJACENT piece values, not
-    * equal keys. The hamming callers close that gap at maxHamming > 3
-    * with a separate piece-collision CANDIDATE estimate
-    * ([[validateHamCandBudget]], r20): the (piece, pval) histogram is
-    * bounded at 4·2¹⁶ rows at ANY corpus size, so the flip-adjacent
-    * term is priceable there where the full-signature flip
-    * enumeration (C(64, ≤ 7) masks) is not. */
-  private def validateIncPairBudget(corpus: DataFrame, inc: DataFrame,
-      key: Column, what: String, remedy: String,
-      corpusHist: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    val mode = Similarity.guardMode(spark, PairBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(PairBudgetMaxKey,
-      PairBudgetDefault.toString).toLong
-    val est = incPairEstFrame(corpus, inc, key, corpusHist).head.getDouble(0)
-    checkIncPairBudget(est, budget, mode, what, remedy)
-  }
-
-  /** [[validateIncPairBudget]]'s estimate as a 1-row frame
-    * ([[scalarsOf]] seam — the extended hamming band fuses it with the
-    * candidate estimate into one precheck job). */
+    * SCOPE: exact-signature heaps only — a LOWER bound on output, tight
+    * for the duplicate-heap detonation it exists to catch. Near-equal
+    * but unequal signature clusters at maxHamming ∈ [4, 7] collide on
+    * FLIP-ADJACENT piece values instead; the hamming callers price those
+    * with [[hamCandEstFrame]]. */
   private def incPairEstFrame(corpus: DataFrame, inc: DataFrame,
       key: Column, corpusHist: Option[DataFrame]): DataFrame =
     corpusHist match {
@@ -523,56 +415,29 @@ object Dedup extends org.apache.spark.internal.Logging {
             col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)))
     }
 
-  private def checkIncPairBudget(est: Double, budget: Long, mode: String,
-      what: String, remedy: String): Unit =
-    if (est > budget) {
-      val msg = f"$what: equal-signature heaps alone guarantee ~$est%.3g " +
-        s"inc-touching output pairs (> budget $budget, conf " +
-        s"$PairBudgetMaxKey) — an increment doc landing in a corpus " +
-        "duplicate heap pairs with EVERY copy (the r13-measured " +
-        s"quadratic regime, incremental form). $remedy, or set " +
-        s"$PairBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+  private def incPairGuard(what: String, remedy: String)(
+      est: => DataFrame): Guard.Check =
+    Guard.budget(PairBudgetConfKey, PairBudgetMaxKey, PairBudgetDefault)(est) {
+      (est, budget) =>
+        f"$what: equal-signature heaps alone guarantee ~$est%.3g " +
+          s"inc-touching output pairs (> budget $budget, conf " +
+          s"$PairBudgetMaxKey) — an increment doc landing in a corpus " +
+          "duplicate heap pairs with EVERY copy (the r13-measured " +
+          s"quadratic regime, incremental form). $remedy, or set " +
+          s"$PairBudgetConfKey=warn|off."
     }
 
-  /** Piece-collision CANDIDATE budget for the extended hamming band
-    * (maxHamming ∈ [4, 7] — r19 ADVICE, the option it offered beyond
-    * a doc note): the pair-output guards above count EXACT-signature
-    * heaps — a LOWER bound that goes blind on clusters of near-equal-
-    * but-unequal signatures (hamming ≤ 7 pairwise: re-encodes whose
-    * perceptual hashes wobble a few bits), whose pairs collide on
-    * FLIP-ADJACENT piece values, not equal keys. This guard prices
-    * the probe join's physical candidate volume instead:
-    * Σ over (piece, pval, mask ∈ {0} ∪ 16 one-bit flips) of
+  /** Piece-collision CANDIDATE volume for the extended hamming band
+    * (maxHamming ∈ [4, 7]), the gap the exact-heap pair estimates are
+    * blind to: Σ over (piece, pval, mask ∈ {0} ∪ 16 one-bit flips) of
     * cp(piece, pval) · cb(piece, pval ⊕ mask) — an UPPER bound on
     * joined rows (self-matches and the doc_a < doc_b halving are not
-    * subtracted; a guard wants the ceiling). Priceable where the
-    * full-signature flip enumeration (C(64, ≤7) masks) is not: a
-    * (piece, pval) histogram is bounded at 4·2¹⁶ rows at ANY corpus
-    * size, so the 17-mask probe expansion tops out at ~4.5 M slim
-    * rows and the estimate is two map-side-combined aggregates plus
-    * a bounded join. Reuses the LSH family's candidate budget conf
-    * ([[CandBudgetConfKey]]/[[CandBudgetMaxKey]]) — the same
-    * semantic: rows the banded join materializes before exact
-    * verification. `partial` marks a build histogram that UNDERcounts
-    * (the sidecar path's ≥ 2-copy truncation hides singleton corpus
-    * sigs) — the Θ(increment + histogram) daily-path contract is kept
-    * at the price of that documented gap, and the message says so. */
-  private def validateHamCandBudget(probeHist: DataFrame,
-      buildHist: DataFrame, what: String, remedy: String,
-      partial: Boolean): Unit = {
-    val spark = probeHist.sparkSession
-    val mode = Similarity.guardMode(spark, CandBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(CandBudgetMaxKey,
-      CandBudgetDefault.toString).toLong
-    val est = hamCandEstFrame(probeHist, buildHist).head.getDouble(0)
-    checkHamCandBudget(est, budget, mode, what, remedy, partial)
-  }
-
-  /** [[validateHamCandBudget]]'s estimate as a 1-row frame
-    * ([[scalarsOf]] seam). */
+    * subtracted). Priceable where the full-signature flip enumeration
+    * (C(64, ≤7) masks) is not: a (piece, pval) histogram is bounded at
+    * 4·2¹⁶ rows at ANY corpus size, so the 17-mask probe expansion tops
+    * out at ~4.5 M slim rows. Reuses the LSH family's candidate budget
+    * ([[CandBudgetConfKey]]/[[CandBudgetMaxKey]]) — the same semantic:
+    * rows the banded join materializes before exact verification. */
   private def hamCandEstFrame(probeHist: DataFrame,
       buildHist: DataFrame): DataFrame = {
     val probed = probeHist.select(col("piece"),
@@ -584,26 +449,28 @@ object Dedup extends org.apache.spark.internal.Logging {
       .agg(coalesce(sum(col("cp") * col("c")), lit(0.0)))
   }
 
-  private def checkHamCandBudget(est: Double, budget: Long, mode: String,
-      what: String, remedy: String, partial: Boolean): Unit =
-    if (est > budget) {
-      val part = if (!partial) "" else " (an UNDERcount here: the " +
-        "sidecar histogram's >=2-copy truncation hides singleton " +
-        "corpus sigs, so the true volume is higher still)"
-      val msg = f"$what: the one-bit piece probe join at the extended " +
-        f"hamming band would materialize ~$est%.3g candidate rows$part " +
-        s"(> budget $budget, conf $CandBudgetMaxKey) — near-equal " +
-        "signature clusters collide on flip-adjacent piece values the " +
-        "exact-heap pair guard cannot see. At this signature density " +
-        "the h >= 4 probe join is quadratic-shaped; " +
-        s"$remedy, or set $CandBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+  /** Piece-candidate guard; `partial` marks a build histogram that
+    * UNDERcounts (the sidecar path's ≥ 2-copy truncation hides
+    * singleton corpus sigs), which the message says. */
+  private def hamCandGuard(what: String, remedy: String, partial: Boolean)(
+      est: => DataFrame): Guard.Check =
+    Guard.budget(CandBudgetConfKey, CandBudgetMaxKey, CandBudgetDefault)(est) {
+      (est, budget) =>
+        val part = if (!partial) "" else " (an UNDERcount here: the " +
+          "sidecar histogram's >=2-copy truncation hides singleton " +
+          "corpus sigs, so the true volume is higher still)"
+        f"$what: the one-bit piece probe join at the extended " +
+          f"hamming band would materialize ~$est%.3g candidate rows$part " +
+          s"(> budget $budget, conf $CandBudgetMaxKey) — near-equal " +
+          "signature clusters collide on flip-adjacent piece values the " +
+          "exact-heap pair guard cannot see. At this signature density " +
+          "the h >= 4 probe join is quadratic-shaped; " +
+          s"$remedy, or set $CandBudgetConfKey=warn|off."
     }
 
   /** (piece, pval) histogram of slim piece rows — bounded at 4·2¹⁶
-    * rows at any corpus size (the property [[validateHamCandBudget]]
-    * prices with). */
+    * rows at any corpus size (the property [[hamCandEstFrame]] prices
+    * with). */
   private def pieceHistOf(pieces: DataFrame): DataFrame =
     pieces.groupBy(col("piece"), col("pval"))
       .agg(count(lit(1)).cast("double").as("c"))
@@ -673,7 +540,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * smaller of any framing — and members are never pair-expanded),
     * and [[incrementalHammingPairs]] already probes the increment.
     * At h ≥ 4 the flip-adjacent candidate volume is additionally
-    * priced by [[validateHamCandBudget]] (r19 ADVICE: near-equal
+    * priced by [[hamCandEstFrame]] (r19 ADVICE: near-equal
     * signature clusters are invisible to the exact-heap pair guard),
     * one bounded aggregate before the join runs. */
   def hammingPairs(sigs: DataFrame, idCol: String, sigCol: String,
@@ -694,42 +561,21 @@ object Dedup extends org.apache.spark.internal.Logging {
         posexplode(array((0 until 4).map(i =>
           shiftright(col("sig"), 16 * i).bitwiseAND(0xFFFFL)): _*)))
       .withColumnRenamed("pos", "piece").withColumnRenamed("col", "pval")
-    // r21: the pair guard and (at the extended band) the candidate
-    // guard evaluate in ONE fused precheck job (scalarsOf) — each
-    // estimate was its own driver-synchronized head job before
-    val spark = sigs.sparkSession
-    val pairMode = Similarity.guardMode(spark, PairBudgetConfKey)
-    val candMode = Similarity.guardMode(spark, CandBudgetConfKey)
-    val pairEst =
-      if (pairMode == "off") None
-      else Some(pairBudgetEstFrame(docs, col("sig")))
-    val candGuardOn = maxHamming > 3 && candMode != "off"
-    var histBarrier: Option[DataFrame] = None
-    val candEst =
-      if (!candGuardOn) None
-      else {
-        // both sides of the candidate estimate read one histogram — a
-        // barrier keeps the (possibly expensive) signature input from
-        // being aggregated twice
-        val hist = Barrier(pieceHistOf(pieces))
-        histBarrier = Some(hist)
-        Some(hamCandEstFrame(hist, hist))
-      }
-    val ests = scalarsOf(pairEst.toSeq ++ candEst.toSeq)
-    pairEst.foreach { _ =>
-      checkPairBudget(ests.head, spark.conf.get(PairBudgetMaxKey,
-        PairBudgetDefault.toString).toLong, pairMode, "hammingPairs",
+    // both guards' estimates evaluate in one fused precheck job; at the
+    // extended band both sides of the candidate estimate read one
+    // histogram barrier, released when the precheck returns
+    Guard.run(sigs.sparkSession, Seq(
+      pairGuard("hammingPairs",
         "Use Dedup.hammingGroups (contracts to distinct signatures " +
-          "first — linear in n, members never pair-expanded)")
-    }
-    candEst.foreach { _ =>
-      checkHamCandBudget(ests.last, spark.conf.get(CandBudgetMaxKey,
-        CandBudgetDefault.toString).toLong, candMode, "hammingPairs",
+          "first — linear in n, members never pair-expanded)")(
+        pairEstFrame(docs, col("sig")))) ++
+      (if (maxHamming <= 3) Nil else Seq(hamCandGuard("hammingPairs",
         "Use Dedup.hammingGroups (the 17x probe expansion then runs " +
           "over DISTINCT signatures) or tighten maxHamming to <= 3",
-        partial = false)
-    }
-    histBarrier.foreach(Barrier.release)
+        partial = false) {
+        val hist = Barrier(pieceHistOf(pieces))
+        hamCandEstFrame(hist, hist)
+      })): _*)
     val a = piecesProbed(pieces, maxHamming).alias("a")
     val b = pieces.alias("b")
     val hamming = bit_count(col("a.sig").bitwiseXOR(col("b.sig")))
@@ -877,8 +723,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     // paid ~1.6x for the triple derivation). The sidecar path never
     // scans the corpus and skips the barrier; guard mode `off` skips
     // it too (nothing would read it twice).
+    val spark = corpusSigs.sparkSession
     val guardedFallback = maxHamming > 3 && corpusHist.isEmpty &&
-      Similarity.guardMode(corpusSigs.sparkSession, CandBudgetConfKey) != "off"
+      Guard.enabled(spark, CandBudgetConfKey)
     val corpusPieces =
       if (guardedFallback) Barrier(pieces(corpusSigs)) else pieces(corpusSigs)
     val allPieces = incPieces.union(corpusPieces)
@@ -887,81 +734,49 @@ object Dedup extends org.apache.spark.internal.Logging {
     // re-deriving the signature column
     def keyed(p: DataFrame): DataFrame =
       p.filter(col("piece") === 0).select(col("doc_id"), col("sig"))
-    // r15 guard: two-sided exact-signature heap estimate (an increment
-    // image landing in a corpus duplicate heap pairs with every copy);
-    // r16: Θ(increment) when the hammingGuardKeys sidecar is passed.
-    // r20 (r19 ADVICE): at the extended band, ALSO price the
-    // flip-adjacent candidate volume the exact-heap pair guard cannot
-    // see. Probe histogram is Θ(increment); the build histogram is the
-    // sidecar's heap sigs exploded to weighted piece rows when the
-    // sidecar is present (Θ(histogram) — the daily path's
-    // no-corpus-scan contract kept; its >= 2-copy truncation makes
-    // the estimate partial, which the failure message says) or one
-    // corpus-scan aggregate otherwise (the same cost shape as the
-    // pair guard's own fallback).
-    // r21 (r20 verdict item 3 — dd13 paid ~0.5 s/run re-pricing an
-    // unchanged corpus): BOTH guards' estimates evaluate in ONE fused
-    // job (scalarsOf) over the shared piece barriers, instead of a
-    // barrier + head job per guard — at the extended band that is 1
-    // precheck job where r20 ran 3 (incHist barrier + 2 heads). The
-    // incHist barrier is kept ONLY on the sidecar path, where the
-    // build histogram unions the probe histogram (two reads in the
-    // fused job); the fallback path reads each histogram once.
-    val spark = corpusSigs.sparkSession
-    val pairMode = Similarity.guardMode(spark, PairBudgetConfKey)
-    val candMode = Similarity.guardMode(spark, CandBudgetConfKey)
-    val pairRemedy = "Contract the corpus heaps with Dedup.hammingGroups " +
-      "(persist the contracted signature asset) or exact-dedup the " +
-      "increment first"
-    val candRemedy = "Contract the corpus heaps with Dedup.hammingGroups " +
-      "(persist the contracted signature asset), exact-dedup the " +
-      "increment first, or tighten maxHamming to <= 3"
-    val pairEst =
-      if (pairMode == "off") None
-      else Some(incPairEstFrame(keyed(corpusPieces), keyed(incPieces),
-        col("sig"), corpusHist))
-    val candGuardOn = maxHamming > 3 && candMode != "off"
-    var incHistBarrier: Option[DataFrame] = None
-    val candEst =
-      if (!candGuardOn) None
-      else {
+    // Two-sided exact-signature heap estimate (an increment image
+    // landing in a corpus duplicate heap pairs with every copy),
+    // Θ(increment) when the hammingGuardKeys sidecar is passed. At the
+    // extended band, ALSO the flip-adjacent candidate volume: the probe
+    // histogram is Θ(increment); the build histogram is the sidecar's
+    // heap sigs exploded to weighted piece rows when the sidecar is
+    // present (the daily path's no-corpus-scan contract kept; its >= 2-
+    // copy truncation makes the estimate partial, which the message
+    // says) or one corpus-scan aggregate otherwise. Both estimates run
+    // in one fused job over the shared piece barriers; the probe
+    // histogram is barriered only on the sidecar path, where the build
+    // histogram unions it (two reads in the fused job).
+    Guard.run(spark, Seq(
+      incPairGuard("incrementalHammingPairs",
+        "Contract the corpus heaps with Dedup.hammingGroups " +
+          "(persist the contracted signature asset) or exact-dedup the " +
+          "increment first")(
+        incPairEstFrame(keyed(corpusPieces), keyed(incPieces), col("sig"),
+          corpusHist))) ++
+      (if (maxHamming <= 3) Nil else Seq(hamCandGuard("incrementalHammingPairs",
+        "Contract the corpus heaps with Dedup.hammingGroups " +
+          "(persist the contracted signature asset), exact-dedup the " +
+          "increment first, or tighten maxHamming to <= 3",
+        partial = corpusHist.isDefined) {
         val incHist =
           if (corpusHist.isEmpty) pieceHistOf(incPieces)
-          else {
-            val b = Barrier(pieceHistOf(incPieces))
-            incHistBarrier = Some(b)
-            b
-          }
+          else Barrier(pieceHistOf(incPieces))
         val buildHist = corpusHist match {
           case Some(h) =>
-            val corpusPieceHist = h.select(col("k").as("sig"),
-                col("cc").cast("double").as("cc"))
+            // split (piece, pval) keys across the two sides sum
+            // linearly through the estimate's Σ cp·cb — no re-aggregate
+            h.select(col("k").as("sig"), col("cc").cast("double").as("cc"))
               .select(col("cc"), posexplode(array((0 until 4).map(i =>
                 shiftright(col("sig"), 16 * i).bitwiseAND(0xFFFFL)): _*)))
               .withColumnRenamed("pos", "piece")
               .withColumnRenamed("col", "pval")
               .groupBy(col("piece"), col("pval"))
               .agg(sum(col("cc")).as("c"))
-            // split (piece, pval) keys across the two sides sum
-            // linearly through the estimate's Σ cp·cb — no re-aggregate
-            corpusPieceHist.union(incHist)
+              .union(incHist)
           case None => pieceHistOf(allPieces)
         }
-        Some(hamCandEstFrame(incHist, buildHist))
-      }
-    val ests = scalarsOf(pairEst.toSeq ++ candEst.toSeq)
-    pairEst.foreach { _ =>
-      checkIncPairBudget(ests.head, spark.conf.get(PairBudgetMaxKey,
-        PairBudgetDefault.toString).toLong, pairMode,
-        "incrementalHammingPairs", pairRemedy)
-    }
-    candEst.foreach { _ =>
-      checkHamCandBudget(ests.last, spark.conf.get(CandBudgetMaxKey,
-        CandBudgetDefault.toString).toLong, candMode,
-        "incrementalHammingPairs", candRemedy,
-        partial = corpusHist.isDefined)
-    }
-    incHistBarrier.foreach(Barrier.release)
+        hamCandEstFrame(incHist, buildHist)
+      })): _*)
     val hamming = bit_count(col("a.sig").bitwiseXOR(col("b.sig")))
     // inc probes the union: inc-inc pairs arrive in both orientations,
     // inc-corpus in one; canonicalize + distinct (hamming is symmetric
@@ -1049,7 +864,8 @@ object Dedup extends org.apache.spark.internal.Logging {
         posexplode(VectorFunctions.lshSignatures(col("embedding"), tables, planes)))
       .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "sig")),
       col("vec_id"))
-    validateCandBudget(tagged, probes, "embeddingPairs")
+    Guard.run(df.sparkSession,
+      candGuard("embeddingPairs")(candEstFrame(tagged, probes)))
     val probed =
       if (probes == 0) tagged
       else tagged.select(col("vec_id"), col("tbl"),
@@ -1106,13 +922,12 @@ object Dedup extends org.apache.spark.internal.Logging {
     * population. */
   private def validateLshRecall(tables: Int, planes: Int,
       threshold: Double, probes: Int,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mode = Similarity.guardMode(spark, Similarity.LshSizingConfKey)
-    if (mode == "off") return
-    val rate = Similarity.lshPerTableRate(threshold, planes, probes)
-    val modelRecall = 1.0 - math.pow(1.0 - rate, tables)
-    if (modelRecall < Similarity.LshRecallFloor) {
-      val msg = f"embeddingPairs geometry ${tables}x$planes " +
+      spark: org.apache.spark.sql.SparkSession): Unit =
+    Guard(spark, Similarity.LshSizingConfKey) {
+      val rate = Similarity.lshPerTableRate(threshold, planes, probes)
+      val modelRecall = 1.0 - math.pow(1.0 - rate, tables)
+      if (modelRecall >= Similarity.LshRecallFloor) None
+      else Some(f"embeddingPairs geometry ${tables}x$planes " +
         f"(probes=$probes) has model recall $modelRecall%.3f at the " +
         f"$threshold verification threshold — below the " +
         f"${Similarity.LshRecallFloor} collapse floor: most qualifying " +
@@ -1121,11 +936,8 @@ object Dedup extends org.apache.spark.internal.Logging {
         "auto-sized overload (threshold only), size tables from " +
         "Similarity.lshTablesFor at a measured or modeled per-table " +
         "rate (Similarity.lshPerTableRate), or set " +
-        s"${Similarity.LshSizingConfKey}=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+        s"${Similarity.LshSizingConfKey}=warn|off.")
     }
-  }
 
   /** Persistable hyperplane-LSH signature asset for INCREMENTAL
     * embedding dedup: one row per vector — (vec_id, embedding, nrm,
@@ -1187,8 +999,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     // embeddingPairs guard extended to the incremental generator);
     // r16: Θ(increment) when the embeddingGuardKeys sidecar is passed;
     // r18: cross terms cover the full ≤-radius probe-mask set
-    validateIncCandBudget(banded(corpusSigs), incBanded, probes,
-      "incrementalEmbeddingPairs", corpusHist, radius)
+    Guard.run(incSigs.sparkSession, incCandGuard("incrementalEmbeddingPairs")(
+      incCandEstFrame(banded(corpusSigs), incBanded, probes, corpusHist,
+        radius)))
     val probed =
       if (probes == 0) incBanded
       else incBanded.select(col("vec_id"), col("tbl"),
@@ -1688,16 +1501,8 @@ object Dedup extends org.apache.spark.internal.Logging {
       dir: String, guardKeys: DataFrame => DataFrame,
       excludeInc: Option[String] = None): Option[DataFrame] = {
     // `off` forces the guards onto the exact full-aggregate fallback
-    // even when a sidecar exists: the operational escape hatch for a
-    // histogram suspected wrong (semantics are unchanged either way —
-    // the sidecar only re-shapes the precheck's cost), and the A/B
-    // instrument that measures what the sidecar saves on the daily
-    // bindings (the r17 bench-attribution legs).
-    // normalized (trim + lowercase) like the enforce|warn|off guard
-    // confs read through SQLConf: 'OFF'/' On ' must select the mode,
-    // not throw mid-pipeline at the first read-time call (r17 ADVICE)
-    val mode = Similarity.confMode(spark, PairHistConfKey, "on", Seq("on", "off"))
-    if (mode == "off") return None
+    // even when a sidecar exists (see PairHistConfKey)
+    if (!Guard.on(spark, PairHistConfKey)) return None
     val (fs, root) = assetFs(spark, dir)
     val scan = scanAsset(fs, root)
     val histPaths = scan.gen

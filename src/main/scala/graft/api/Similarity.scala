@@ -12,23 +12,6 @@ import graft.functions.VectorFunctions
   * (q_id, n_id, cos, rank). */
 object Similarity extends org.apache.spark.internal.Logging {
 
-  /** Read a mode conf (enforce|warn|off guards, the pairhist on|off
-    * toggle) NORMALIZED — trimmed and lowercased — so 'OFF' / ' Warn '
-    * select the mode instead of throwing mid-pipeline at the first
-    * guarded call (r17 ADVICE); a genuinely unknown token still fails
-    * loud naming the key and the accepted set. */
-  private[graft] def confMode(spark: org.apache.spark.sql.SparkSession,
-      key: String, default: String, allowed: Seq[String]): String = {
-    val mode = spark.conf.get(key, default).trim.toLowerCase
-    require(allowed.contains(mode),
-      s"$key must be ${allowed.mkString("|")}, got '$mode'")
-    mode
-  }
-
-  private[graft] def guardMode(spark: org.apache.spark.sql.SparkSession,
-      key: String): String =
-    confMode(spark, key, "enforce", Seq("enforce", "warn", "off"))
-
   /** Session conf governing the coarse-quantizer sizing check:
     * `enforce` (default) throws on a k₁ outside the √ band, `warn`
     * logs the cost model and proceeds, `off` skips the check. */
@@ -52,24 +35,21 @@ object Similarity extends org.apache.spark.internal.Logging {
     * more than [[HierSizingBand]]× the optimal routing — the guard the
     * r12 verdict asked for: the measured third-decade wall was
     * "prevented only by documentation". */
-  private def validateHierSizing(k: Long, k1: Long, w: Int,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mode = guardMode(spark, HierSizingConfKey)
-    if (mode == "off" || k == 0 || k1 == 0) return
-    val actual = k1 + w.toDouble * k / k1
-    val optimal = 2.0 * math.sqrt(w.toDouble * k)
-    if (actual > HierSizingBand * optimal) {
-      val msg = f"hier routing k1=$k1 is outside the sqrt band for " +
+  private def validateHierSizing(kByName: => Long, k1ByName: => Long,
+      w: Int, spark: org.apache.spark.sql.SparkSession): Unit =
+    Guard(spark, HierSizingConfKey) {
+      val (k, k1) = (kByName, k1ByName)
+      val actual = k1 + w.toDouble * k / k1
+      val optimal = 2.0 * math.sqrt(w.toDouble * k)
+      if (k == 0 || k1 == 0 || actual <= HierSizingBand * optimal) None
+      else Some(f"hier routing k1=$k1 is outside the sqrt band for " +
         f"k=$k, w=$w: per-row cost k1 + w*k/k1 = ${actual}%.0f dots vs " +
         f"optimal 2*sqrt(w*k) = ${optimal}%.0f at k1* = " +
         s"${coarseSizeFor(k, w)} (${f"${actual / optimal}%.1f"}x > " +
         s"${HierSizingBand}x band). A k1 that grows linearly with k " +
         "re-creates the n*k1 routing wall; size k1 ~ sqrt(w*k) (or use " +
-        s"the auto-sized overload), or set $HierSizingConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+        s"the auto-sized overload), or set $HierSizingConfKey=warn|off.")
     }
-  }
 
   /** Session conf governing the PQ-family rerank-budget check
     * ([[validateRerankSizing]]): `enforce` (default) throws on a
@@ -131,26 +111,21 @@ object Similarity extends org.apache.spark.internal.Logging {
     * measured recall collapsing 0.94 → 0.35 under a fixed tuning-scale
     * R while nothing in the API stopped a caller from pinning it. */
   private def validateRerankSizing(nByName: => Long, k: Int, rerank: Int,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mode = guardMode(spark, RerankSizingConfKey)
-    if (mode == "off") return // before forcing n: `off` must skip the count job
-    val n = nByName
-    if (n <= 0) return
-    val auto = rerankFor(n, k)
-    val floor = math.max(k.toLong, auto.toLong / RerankBand)
-    if (rerank < floor) {
-      val msg = s"PQ rerank budget $rerank is >${RerankBand}x below the " +
+      spark: org.apache.spark.sql.SparkSession): Unit =
+    Guard(spark, RerankSizingConfKey) {
+      val n = nByName
+      val auto = rerankFor(n, k)
+      val floor = math.max(k.toLong, auto.toLong / RerankBand)
+      if (n <= 0 || rerank >= floor) None
+      else Some(s"PQ rerank budget $rerank is >${RerankBand}x below the " +
         s"calibrated curve for a $n-row corpus: R(n) = $RerankCalibR * " +
         s"sqrt(n/$RerankCalibN) = $auto (floor $floor). A tuning-scale " +
         "constant collapses recall as the corpus grows (measured r13: " +
         "R=50 read recall@5 0.35 at 2M vectors vs 0.91 at the " +
         "corpus-scaled R=5000). Use the auto-sized overload (no rerank " +
         "arg), re-measure the knee at this scale with tools/RecallProbe, " +
-        s"or set $RerankSizingConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+        s"or set $RerankSizingConfKey=warn|off.")
     }
-  }
 
   /** Session conf governing the PQ-family AUTO paths' concentration
     * floor ([[validatePqConcentration]]): `enforce` (default) throws
@@ -173,7 +148,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     * mixtures. */
   val PqConcStatFloorKey = "spark.graft.pq.concfloor.stat"
 
-  /** MEASURED calibration. r16 (tools/ConcStatProbe over the r15
+  /** MEASURED calibration. r16 (STATUS r16, over the r15
     * recall campaign's own fixtures): the 10th-percentile 5th-NN
     * cosine ([[annConcentration]], k = 5, sampleN = 1024) reads
     * 0.267–0.326 on every diffuse fixture (sf0.001 / sf0.01 / sf0.1
@@ -228,45 +203,43 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def validatePqConcentration(cNormed: DataFrame, n: Long,
       k: Int, what: String): Unit = {
     val spark = cNormed.sparkSession
-    val mode = guardMode(spark, PqConcConfKey)
-    if (mode == "off") return
-    // A corpus with n <= k rows cannot be in the collapse regime the
-    // floor polices (there is no "cluster population >> rerank budget"
-    // at that size, and the exact scan is affordable anyway) — and
-    // concentrationSample's n > k contract would hard-fail it, turning
-    // the r16 floor into a regression on previously-working tiny-corpus
-    // auto calls (warn mode could not proceed either, only off).
-    if (n <= k) {
-      logWarning(s"$what: corpus holds only $n rows (<= k = $k) — " +
-        "concentration floor skipped; a corpus this small cannot " +
-        "collapse the sqrt(n) rerank curve")
-      return
-    }
-    val tau = spark.conf.get(PqConcFracKey,
-      PqConcFracDefault.toString).toDouble
-    val cs = concentrationSample(cNormed, "vec_id", "embedding", k, 1024,
-      Some(n))
-    Barrier.release(cs.sample)
-    if (!cs.concFrac.isNaN && cs.concFrac >= tau) {
-      val level = spark.conf.get(PqConcStatFloorKey,
-        PqConcStatFloorDefault.toString).toDouble
-      val msg = f"$what (auto-sized): ${100 * cs.concFrac}%.0f%% of " +
-        f"sampled queries have their ${k}th-NN cosine >= $level " +
-        f"(tolerated share ${100 * tau}%.0f%%, conf $PqConcFracKey) — " +
-        "that query population sits outside the sqrt(n) rerank " +
-        "curve's validated regime (measured r15-r17: diffuse corpora " +
-        "hold 0.91-0.97 recall@5 on the curve; clustered ones read " +
-        "0.23-0.47, and MIXTURES collapse the same way while keeping " +
-        "a diffuse-looking 10th-percentile statistic — lambda=0.5/" +
-        "0.75 mixes at 200k read 0.58/0.47 on the auto budget where " +
-        "the measured remedy read 0.99; within-cluster cosine gaps " +
-        "compress below ADC's resolution, and recall returns only at " +
-        "R = cluster population). Use rerankForMeasured (pass its " +
-        "budget to the pinned overload), route with annTopK/annRoute " +
-        "(it takes the measured-rerank path on this shape), or set " +
-        s"$PqConcConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+    Guard(spark, PqConcConfKey) {
+      // A corpus with n <= k rows cannot be in the collapse regime the
+      // floor polices (there is no "cluster population >> rerank
+      // budget" at that size, and the exact scan is affordable anyway)
+      // — and concentrationSample's n > k contract would hard-fail it.
+      if (n <= k) {
+        logWarning(s"$what: corpus holds only $n rows (<= k = $k) — " +
+          "concentration floor skipped; a corpus this small cannot " +
+          "collapse the sqrt(n) rerank curve")
+        None
+      } else {
+        val tau = spark.conf.get(PqConcFracKey,
+          PqConcFracDefault.toString).toDouble
+        val cs = concentrationSample(cNormed, "vec_id", "embedding", k,
+          1024, Some(n))
+        Barrier.release(cs.sample)
+        if (cs.concFrac.isNaN || cs.concFrac < tau) None
+        else {
+          val level = spark.conf.get(PqConcStatFloorKey,
+            PqConcStatFloorDefault.toString).toDouble
+          Some(f"$what (auto-sized): ${100 * cs.concFrac}%.0f%% of " +
+            f"sampled queries have their ${k}th-NN cosine >= $level " +
+            f"(tolerated share ${100 * tau}%.0f%%, conf $PqConcFracKey) — " +
+            "that query population sits outside the sqrt(n) rerank " +
+            "curve's validated regime (measured r15-r17: diffuse corpora " +
+            "hold 0.91-0.97 recall@5 on the curve; clustered ones read " +
+            "0.23-0.47, and MIXTURES collapse the same way while keeping " +
+            "a diffuse-looking 10th-percentile statistic — lambda=0.5/" +
+            "0.75 mixes at 200k read 0.58/0.47 on the auto budget where " +
+            "the measured remedy read 0.99; within-cluster cosine gaps " +
+            "compress below ADC's resolution, and recall returns only at " +
+            "R = cluster population). Use rerankForMeasured (pass its " +
+            "budget to the pinned overload), route with annTopK/annRoute " +
+            "(it takes the measured-rerank path on this shape), or set " +
+            s"$PqConcConfKey=warn|off.")
+        }
+      }
     }
   }
 
@@ -275,7 +248,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   val ProbeSizingConfKey = "spark.graft.nprobe.sizing"
 
   /** Cell-probe width for a recall-robust IVFADC scan: half the cells —
-    * the measured 0.94-recall point of the r12 PqTune sweep (nProbe 4
+    * the measured 0.94-recall point of the STATUS r12 PQ sweep (nProbe 4
     * of 8 + corpus-scaled rerank matches cell-free s6's recall at half
     * the code scan). The committed s8 knee (3 of 8, recall 0.88 at
     * tune scale) sits inside the tolerated band below this. */
@@ -289,12 +262,11 @@ object Similarity extends org.apache.spark.internal.Logging {
     * probed cells is unfixable by any rerank budget: true neighbors
     * in unprobed cells are unreachable. */
   private def validateProbeSizing(nCells: Int, nProbe: Int,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mode = guardMode(spark, ProbeSizingConfKey)
-    if (mode == "off") return
-    val floor = math.max(1, (nCells + 3) / 4)
-    if (nProbe < floor) {
-      val msg = s"IVFADC nProbe=$nProbe of $nCells cells is below the " +
+      spark: org.apache.spark.sql.SparkSession): Unit =
+    Guard(spark, ProbeSizingConfKey) {
+      val floor = math.max(1, (nCells + 3) / 4)
+      if (nProbe >= floor) None
+      else Some(s"IVFADC nProbe=$nProbe of $nCells cells is below the " +
         s"probe-starved floor $floor (= nCells/4; the recall-robust " +
         s"width is probeFor(nCells) = ${probeFor(nCells)}). Recall in " +
         "this regime is PROBE-limited — true neighbors in unprobed " +
@@ -302,11 +274,8 @@ object Similarity extends org.apache.spark.internal.Logging {
         "nProbe 3->8 moved recall 0.70->0.87 at 200k vectors while 4x " +
         "the residual codes moved it 0.70->0.73). Use the auto-sized " +
         "overload, re-measure with tools/RecallProbe, or set " +
-        s"$ProbeSizingConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
+        s"$ProbeSizingConfKey=warn|off.")
     }
-  }
 
   /** Hash tables needed for a target candidate recall given a
     * measured per-table collision rate — the hyperplane-LSH
@@ -515,17 +484,17 @@ object Similarity extends org.apache.spark.internal.Logging {
       LshMaxTablesDefault.toString).toInt
     val maxFrac = spark.conf.get(LshMaxCandFracKey,
       LshMaxCandFracDefault.toString).toDouble
-    // conf validated on EVERY call (not just past the cap): a typo'd
-    // mode must not pass silently until the first over-cap corpus
-    val mode = guardMode(spark, LshSizingConfKey)
     val tried = lshRadiusLadder(n, threshold, recallTarget, maxRadius)
-    lshRadiusFit(tried, maxTables, maxFrac) match {
-      case Some(g) => g
-      case None =>
+    val fit = lshRadiusFit(tried, maxTables, maxFrac)
+    // the mode is parsed on EVERY call (not just past the cap): a typo'd
+    // mode must not pass silently until the first over-cap corpus
+    Guard(spark, LshSizingConfKey) {
+      if (fit.isDefined) None
+      else {
         val ladder = tried.map(g => f"radius ${g.radius}: ${g.tables} " +
           f"tables, cand/query ≈ ${100 * lshCandFraction(g)}%.1f%% of " +
           "corpus").mkString("; ")
-        val msg = f"banded LSH cannot hold recall $recallTarget at " +
+        Some(f"banded LSH cannot hold recall $recallTarget at " +
           f"threshold $threshold and n = $n inside the table cap " +
           f"($maxTables, conf $LshMaxTablesKey) and candidate budget " +
           f"(${100 * maxFrac}%.0f%% of corpus per query, conf " +
@@ -539,18 +508,19 @@ object Similarity extends org.apache.spark.internal.Logging {
           "approaches a scan); use the PQ/IVF family " +
           "(pqTopK/ivfadcTopK) for low-similarity search, or set " +
           s"$LshSizingConfKey=warn|off to clamp to the caps (an " +
-          "explicit recall floor)."
-        if (mode == "enforce") throw new IllegalArgumentException(msg)
-        if (mode == "warn") logWarning(msg)
-        // clamp: cap the tables, then take the largest radius whose
-        // candidate fraction still fits the budget at that table count
-        // (radius 1 is always admissible — it is the r14-validated
-        // volume-disciplined baseline)
-        val base = tried.head
-        (maxRadius to 2 by -1)
-          .map(r => LshGeometry(maxTables, base.planes, base.probes, r))
-          .find(lshCandFraction(_) <= maxFrac)
-          .getOrElse(LshGeometry(maxTables, base.planes, base.probes, 1))
+          "explicit recall floor).")
+      }
+    }
+    fit.getOrElse {
+      // clamp: cap the tables, then take the largest radius whose
+      // candidate fraction still fits the budget at that table count
+      // (radius 1 is always admissible — it is the r14-validated
+      // volume-disciplined baseline)
+      val base = tried.head
+      (maxRadius to 2 by -1)
+        .map(r => LshGeometry(maxTables, base.planes, base.probes, r))
+        .find(lshCandFraction(_) <= maxFrac)
+        .getOrElse(LshGeometry(maxTables, base.planes, base.probes, 1))
     }
   }
 
@@ -641,7 +611,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       s"probes must be in [0, planes=$planes], got $probes")
     val maxFrac = spark.conf.get(LshMaxCandFracKey,
       LshMaxCandFracDefault.toString).toDouble
-    val mode = guardMode(spark, LshSizingConfKey)
+    val guarded = Guard.enabled(spark, LshSizingConfKey)
     def recallAt(r: Int): Double = 1.0 - math.pow(
       1.0 - lshPerTableRate(threshold, planes, probes, r), tables)
     def fracAt(r: Int): Double =
@@ -652,7 +622,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // baseline the asset was built to run at), but an over-budget
     // BASELINE should not pass silently — an escalated radius at the
     // same fraction would be rejected (r18 ADVICE)
-    if (mode != "off" && ladder.head._3 > maxFrac)
+    if (guarded && ladder.head._3 > maxFrac)
       logWarning(f"lshIncRadiusFor: the radius-1 BASELINE already " +
         f"probes ${100 * ladder.head._3}%.1f%% of the corpus per " +
         f"increment row (> the ${100 * maxFrac}%.0f%% budget, conf " +
@@ -663,13 +633,14 @@ object Similarity extends org.apache.spark.internal.Logging {
         "derivation.")
     val admissible = ladder.filter { case (r, _, f) =>
       r == 1 || f <= maxFrac }
-    admissible.find(_._2 >= recallTarget) match {
-      case Some((r, _, _)) => r
-      case None =>
+    val hit = admissible.find(_._2 >= recallTarget)
+    Guard(spark, LshSizingConfKey) {
+      if (hit.isDefined) None
+      else {
         val rungs = ladder.map { case (r, rec, f) =>
           f"radius $r: model recall $rec%.3f, cand/inc-row ≈ " +
             f"${100 * f}%.1f%% of corpus" }.mkString("; ")
-        val msg = f"incremental LSH probing cannot hold recall " +
+        Some(f"incremental LSH probing cannot hold recall " +
           f"$recallTarget at threshold $threshold against a " +
           f"$tables-table × $planes-plane signature asset inside the " +
           f"candidate budget (${100 * maxFrac}%.0f%% of corpus per " +
@@ -681,11 +652,10 @@ object Similarity extends org.apache.spark.internal.Logging {
           "Similarity.lshGeometryFor derives for this (n, threshold), " +
           "use the PQ/IVF family for low-similarity search, or set " +
           s"$LshSizingConfKey=warn|off to clamp to the best " +
-          "admissible rung (an explicit recall floor)."
-        if (mode == "enforce") throw new IllegalArgumentException(msg)
-        if (mode == "warn") logWarning(msg)
-        admissible.maxBy(_._2)._1
+          "admissible rung (an explicit recall floor).")
+      }
     }
+    hit.getOrElse(admissible.maxBy(_._2))._1
   }
 
   /** CONCENTRATION statistic for ANN family routing: the 10th

@@ -349,31 +349,8 @@ object HashFunctions {
   val WinnowK = 8
   val WinnowW = 4
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => LongArrayMinHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashes(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash_p",
-      exprs => SimHashP(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("str_hash_p",
-      exprs => StrHashP(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash_text",
-      exprs => SimHashText(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("winnow_fingerprints",
-      exprs => WinnowFingerprints(exprs.head, WinnowK, WinnowW), "built-in")
-    reg.createOrReplaceTempFunction("tokenize_words",
-      exprs => TokenizeWords(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("word_ngrams",
-      exprs => WordNGrams(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("top_gram_count",
-      exprs => TopGramCount(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      exprs => BloomMightContain(exprs(0), exprs(1), intLit(exprs(2))), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, NativeFunctions.hash)
 
   /** Foldable integer arg of a function call (int or long literal),
     * with an analysis-time error instead of a ClassCastException. */

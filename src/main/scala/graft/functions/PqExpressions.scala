@@ -339,19 +339,8 @@ object PqKernels {
   * replay L2 Lloyd training (the oracle side of the PQ pipeline). */
 object PqFunctions {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_centroid_l2",
-      exprs => NearestCentroidL2(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_lut", exprs => PqLut(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_adc", exprs => PqAdc(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_l2", exprs => FloatVecL2(exprs(0), exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, NativeFunctions.pq)
 
   def nearestCentroidL2(cents: Column, emb: Column): Column =
     call_function("nearest_centroid_l2", cents, emb)

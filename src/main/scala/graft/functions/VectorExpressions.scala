@@ -322,33 +322,8 @@ object VectorKernels {
   */
 object VectorFunctions {
 
-  def register(spark: SparkSession): Unit = {
-    PqFunctions.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => FloatVecDot(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_centroid",
-      exprs => NearestCentroid(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hier_nearest_centroid",
-      exprs => HierNearestCentroid(exprs(0), exprs(1), exprs(2),
-        exprs(3).eval().asInstanceOf[Int]),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_signatures",
-      {
-        case Seq(e) =>
-          LshSignatures(e, SimConstants.NTables, SimConstants.NPlanes)
-        case Seq(e, t, p) =>
-          LshSignatures(e, t.eval().asInstanceOf[Int], p.eval().asInstanceOf[Int])
-        case other => throw new IllegalArgumentException(
-          s"lsh_signatures expects 1 or 3 args, got ${other.length}")
-      },
-      "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, NativeFunctions.pq ++ NativeFunctions.vector)
 
   def lshSignatures(emb: Column): Column = call_function("lsh_signatures", emb)
 

@@ -29,12 +29,11 @@ import graft.functions.VectorFunctions
   */
 object SimilarityQueries {
 
-  // geometry shared with tools/IvfTune so the recall evidence can
-  // never drift from the shipped configuration
+  // the geometry the s3 recall sweep measured (STATUS r10, item 4)
   private[graft] val K = 5          // neighbors per query
   private[graft] val NQueries = 10  // vec_id < 10 are the probe vectors
   private[graft] val NCells = 16    // IVF cells (seeded by vec_id < 16)
-  // IVF cells probed per query: the measured knee (tools/IvfTune @
+  // IVF cells probed per query: the measured knee (STATUS r10 sweep @
   // sf0.01 vs the s1 exact baseline — recall@5 0.90 at nProbe=1, 0.92
   // from 2 through 6, 0.94 only at 8 = probing half the cells;
   // wall-clock flat across the sweep). 2 buys the recall plateau at
@@ -143,8 +142,8 @@ object SimilarityQueries {
   // lookups against a broadcast LUT, the top-PqRerank per query re-rank
   // exactly. Candidate selection is the bounded TopKPerKey aggregate —
   // map-side pre-reduction, not a full-corpus window sort.
-  // Geometry from tools/PqTune vs the s1 exact baseline (the fixture
-  // embeddings are near-uniform — PQ's hard case for NOISE, though the
+  // Geometry from the STATUS r12 PQ sweep vs the s1 exact baseline (the
+  // fixture embeddings are near-uniform — PQ's hard case for NOISE, though the
   // r15 clustered probe showed concentration brings its own wall:
   // compressed within-cluster gaps push the rerank knee toward the
   // cluster population — see Similarity.rerankFor's caveat):
@@ -207,9 +206,9 @@ object SimilarityQueries {
   // exactly as dot(q, cell) + ADC over the residual LUT. Residuals
   // concentrate near zero, so the same code budget quantizes them
   // better than raw vectors (8×16 codes here match the recall 8×64
-  // needs on raw vectors — tools/PqTune vs this query's measured
-  // recall).
-  // Geometry from tools/PqTune's IVFADC sweep (recall@5 vs the exact
+  // needs on raw vectors — the STATUS r12 PQ sweep vs this query's
+  // measured recall).
+  // Geometry from the STATUS r12 IVFADC sweep (recall@5 vs the exact
   // baseline at sf0.01): rerank is NOT the binding constraint here —
   // recall plateaus at 0.86 from rerank 50 to 100 at nProbe 2, i.e.
   // probe-limited (true neighbors in unprobed cells are unreachable),

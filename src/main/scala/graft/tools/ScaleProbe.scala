@@ -572,7 +572,7 @@ object ScaleProbe {
       }.toSeq
       val noise = measured.exists(p => p.spread > 2.0 || p.warm < 0)
       // Locale.ROOT: the f-interpolator would emit comma decimals on a
-      // non-English default locale (same fix as Bench/IvfTune)
+      // non-English default locale (same fix as Bench)
       println(String.format(java.util.Locale.ROOT,
         "[probe] %-28s exponents %s%s",
         name,

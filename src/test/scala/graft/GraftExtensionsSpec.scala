@@ -8,19 +8,46 @@ import org.scalatest.funsuite.AnyFunSuite
   * function from pure SQL with no runtime register calls. */
 class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
 
-  test("a conf-extended session resolves graft functions from pure SQL") {
+  /** Run `f` on a session whose only graft registration is the
+    * extension. It reuses the shared SparkContext with a new
+    * SessionState (`spark.sql.extensions=graft.GraftExtensions` is the
+    * conf-file equivalent, but it's a static conf — on a shared test
+    * context only the programmatic injection point can apply). */
+  private def withExtensionSession[A](f: SparkSession => A): A = {
     val orig = spark // ensure the shared context exists
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
-      // reuses orig's SparkContext; new SessionState with the extensions.
-      // (`spark.sql.extensions=graft.GraftExtensions` is the conf-file
-      // equivalent, but it's a static conf — on a shared test context
-      // only the programmatic injection point can apply.)
       val s2 = SparkSession.builder()
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(s2 ne orig)
+      f(s2)
+    } finally {
+      SparkSession.setDefaultSession(orig)
+      SparkSession.setActiveSession(orig)
+    }
+  }
+
+  test("an extension-only session resolves every runtime-registered name") {
+    import graft.functions.{HashFunctions, PqFunctions, VectorFunctions}
+    val plain = spark.newSession()
+    val registry = plain.sessionState.functionRegistry
+    val builtin = registry.listFunction().toSet
+    HashFunctions.register(plain)
+    VectorFunctions.register(plain)
+    PqFunctions.register(plain)
+    val runtime = registry.listFunction().toSet -- builtin
+    assert(runtime.size >= 20, s"runtime registered only $runtime")
+    withExtensionSession { s2 =>
+      val missing = runtime.filterNot(s2.sessionState.functionRegistry.functionExists)
+      assert(missing.isEmpty,
+        s"registered at runtime but unknown to the extension: ${missing.mkString(", ")}")
+    }
+  }
+
+  test("a conf-extended session resolves graft functions from pure SQL") {
+    withExtensionSession { s2 =>
       val dot = s2.sql(
         "SELECT vec_dot(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)), " +
           "array(CAST(3 AS FLOAT), CAST(4 AS FLOAT)))").head().getDouble(0)
@@ -47,9 +74,6 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
       assert(desc.contains("vec_dot"))
       // (no negative check against the shared session: other suites
       // legitimately register the same functions on it at runtime)
-    } finally {
-      SparkSession.setDefaultSession(orig)
-      SparkSession.setActiveSession(orig)
     }
   }
 }

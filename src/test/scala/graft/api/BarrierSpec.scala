@@ -67,13 +67,11 @@ class BarrierSpec extends AnyFunSuite with SparkSpec {
       assert(withMode(m)(run()) == base, s"mode $m diverged from localCheckpoint")
   }
 
-  test("persist-mode scoped pqTrain releases the pool-thread barriers (collecting/adopt)") {
-    // pqTrain submits its m sub-quantizer trainings from pool threads;
-    // the scope stack is a ThreadLocal, so without Barrier.collecting +
-    // adopt the per-thread barriers would escape the caller's scoped
-    // block and stay cached forever under persist mode (the FaaS
-    // deployment's barrier mode — a streaming seeding step would leak
-    // one cached frame per subspace per round)
+  test("persist-mode scoped pqTrain releases its pool-thread barriers") {
+    // every barrier pqTrain creates must land in the caller's scoped
+    // block: one escaping it stays cached forever under persist mode
+    // (the FaaS deployment's barrier mode — a streaming seeding step
+    // would leak one cached frame per subspace per round)
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001").limit(200)
     withMode("persist") {
       val leaked = leakedIds {
@@ -100,26 +98,6 @@ class BarrierSpec extends AnyFunSuite with SparkSpec {
       }
       assert(leaked.isEmpty,
         s"leaked localCheckpoint RDDs past the scope: ids $leaked")
-    }
-  }
-
-  test("collecting releases its barriers when the body throws (persist mode)") {
-    // On the error path nobody will ever adopt the collected frames:
-    // without the catch-release, a failed pool-thread task under
-    // persist mode leaks every barrier it created before the throw —
-    // the exact leak collecting exists to prevent, just on failure.
-    val docs = Tables.documents(spark, sf0001).limit(50)
-    withMode("persist") {
-      val leaked = leakedIds {
-        intercept[RuntimeException] {
-          Barrier.collecting {
-            Barrier(docs.select("doc_id")) // materializes + registers
-            throw new RuntimeException("subspace failed")
-          }
-        }
-      }
-      assert(leaked.isEmpty,
-        s"leaked cached barriers on the error path: RDD ids $leaked")
     }
   }
 

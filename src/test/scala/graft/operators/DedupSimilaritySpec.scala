@@ -491,7 +491,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
         s"ADC ${r.getDouble(2)} != reconstruction dot $dot for ${r.getLong(0)}")
     }
     // recall@5 vs the exact s1 baseline at the SHIPPED geometry
-    // (8 × 64 codes, rerank 50) — tools/PqTune measures 0.90 @ sf0.001
+    // (8 × 64 codes, rerank 50) — the STATUS r12 PQ sweep read 0.90 @ sf0.001
     // / 0.94 @ sf0.01; pinned with margin
     def topSets(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
@@ -520,7 +520,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     val adc = topSets(graft.api.Similarity.ivfadcTopK(
       emb, queries, "vec_id", "embedding", 5,
       AdcCells, AdcCoarseIters, PqM, AdcKs, PqIters, AdcProbe, PqRerank))
-    // recall floor (tools/PqTune measures 0.88 at sf0.01 at this
+    // recall floor (the STATUS r12 IVFADC sweep read 0.88 at sf0.01 at this
     // geometry; the probe ceiling is the documented IVF knob)
     val recall = exact.map { case (q, ns) =>
       val got = adc.getOrElse(q, Array.empty).map(_._2).toSet
